@@ -670,3 +670,27 @@ def test_stream_split_admits_arrivals_into_corpus_clusters(spark, tmp_path):
         assert rerun[doc_id] == (group_id, split)
     for doc_id, assignment in base.items():  # corpus rows never moved
         assert rerun[doc_id] == assignment
+
+
+def test_stream_split_unmatched_arrival_keeps_own_group_on_id_collision(spark, tmp_path):
+    """An unmatched arrival whose doc_id equals a clustered corpus doc's id
+    is still a new singleton group: the corpus label map is consulted only
+    for matched rows, so the colliding id does not inherit the corpus
+    doc's group."""
+    from web_crawler_spark.streaming import stream_split
+
+    def doc(vocab: str, extra: str = "") -> str:
+        return f"{' '.join(f'{vocab}{i}' for i in range(40))} {extra}".strip()
+
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    corpus = spark.createDataFrame(
+        [(i, t, "en", "s0", len(t)) for i, t in [(0, doc("alpha")), (1, doc("alpha", "tailA"))]],
+        cols,
+    )
+    src = tmp_path / "arrivals"
+    spark.createDataFrame([(1, doc("omega"), "en", "s0", 40)], cols).write.parquet(str(src))
+
+    state = stream_split.build_split_state(spark, corpus)
+    assert {r["dup_of"]: r["group_id"] for r in state[3].collect()}[1] == 0
+    got = stream_split.split_batch(spark, str(src), state).collect()
+    assert [(r["doc_id"], r["group_id"], r["matched"]) for r in got] == [(1, 1, False)]

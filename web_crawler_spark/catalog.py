@@ -75,18 +75,6 @@ class SnapshotTable:
         self._commit(snaps)
         return Snapshot(sid, mode, round, path, rows)
 
-    def write_ref(self, paths: list[str], round: int, mode: str = "append") -> None:
-        """Commit a snapshot that REFERENCES data files owned by another table
-        (zero Spark jobs — Iceberg's metadata-only commit). Rollback never
-        deletes referenced files; the owning table does."""
-        snaps = self._load()
-        sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
-        snaps.append(
-            {"snapshot_id": sid, "mode": mode, "round": round, "paths": list(paths),
-             "rows": -1, "ref": True}
-        )
-        self._commit(snaps)
-
     def live_paths(self, as_of_round: Optional[int] = None) -> list[str]:
         """Snapshot paths contributing to the current (or as-of-round) state."""
         snaps = self._load()
@@ -104,10 +92,7 @@ class SnapshotTable:
                 live = [s]
             else:
                 live.append(s)
-        out: list[str] = []
-        for s in live:
-            out.extend(s["paths"] if s.get("ref") else [s["path"]])
-        return out
+        return [s["path"] for s in live]
 
     def read(
         self,
@@ -165,11 +150,8 @@ class SnapshotTable:
                 break
         if len(prefix) < min_snapshots:
             return False
-        paths: list[str] = []
-        for s in prefix:
-            paths.extend(s["paths"] if s.get("ref") else [s["path"]])
         reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(*paths)
+        df = reader.parquet(*[s["path"] for s in prefix])
         if target_partitions is None:
             target_partitions = spark.sparkContext.defaultParallelism
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
@@ -197,8 +179,7 @@ class SnapshotTable:
         self._commit([merged] + remaining)
         dead = [s for s in snaps if s not in live]  # superseded by overwrite
         for s in prefix + dead:  # expire AFTER the manifest swap — no reader race
-            if not s.get("ref"):
-                shutil.rmtree(s["path"], ignore_errors=True)
+            shutil.rmtree(s["path"], ignore_errors=True)
         return True
 
     def rollback_to_round(self, round: int) -> None:
@@ -215,11 +196,9 @@ class SnapshotTable:
         snaps = self._load()
         keep = [s for s in snaps if s["round"] <= round]
         self._commit(keep)
-        # every non-ref snap-* dir not in the kept manifest is dead: either
-        # explicitly dropped (round > resume point) or an orphan of a crashed
-        # write. ref snapshots point at files owned by another table, so the
-        # only legitimate dirs here are the kept non-ref paths.
-        kept_paths = {s["path"] for s in keep if not s.get("ref")}
+        # every snap-* dir not in the kept manifest is dead: either explicitly
+        # dropped (round > resume point) or an orphan of a crashed write
+        kept_paths = {s["path"] for s in keep}
         for name in os.listdir(self.dir):
             p = os.path.join(self.dir, name)
             if name.startswith("snap-") and os.path.isdir(p) and p not in kept_paths:

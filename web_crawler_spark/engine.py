@@ -488,9 +488,11 @@ def crawl(
         # n_hosts*n_salts distinct keys — lumpy at high parallelism; url_hash
         # is per-row uniform, so the slowest fetch task tracks the mean.
         # (host_bucket/salt stay on the rows for the table partition spec.)
+        # a single-partition round needs no exchange: coalesce(1) runs the
+        # fetch in the scan's one task
+        spread = scheduled.coalesce(1) if P == 1 else scheduled.repartition(P, "url_hash")
         stage_df = (
-            scheduled.repartition(P, "url_hash")
-            .mapInPandas(fetch_fn, udfs.FETCHED_SCHEMA)
+            spread.mapInPandas(fetch_fn, udfs.FETCHED_SCHEMA)
             .withColumn("round", F.lit(rnd))
         )
         snap = tables["stage"].write(stage_df, rnd)

@@ -136,19 +136,6 @@ def make_fetch_parse(cfg: webgen.WebConfig, job: JobConfig, rules: RulesByHost |
     return fetch_parse
 
 
-def make_robots_gate(rules: RulesByHost, user_agent: str):
-    """pandas UDF body: Series[url] → Series[bool] via broadcast robots rules.
-
-    Fail-open semantics per the reference (crawler.py:134-140). ``rules`` should
-    arrive via ``sc.broadcast`` at scale; a closure is fine for small rule sets.
-    """
-
-    def gate(urls: pd.Series) -> pd.Series:
-        return urls.map(lambda u: allowed(u, user_agent, rules))
-
-    return gate
-
-
 def make_canonicalize(domain: str):
     """pandas UDF body: (href, base_url) → clean in-domain URL or None.
 

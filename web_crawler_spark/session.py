@@ -3,6 +3,11 @@
 Local mode here; on a real cluster the same builder is used by
 ``spark-submit --py-files`` (see scripts/submit_crawl.py). AQE is on so skewed
 host buckets get runtime skew-join splitting on top of our explicit salting.
+
+Local sessions run their Python workers from ``workerd``, which removes a
+~0.2 s per-task archive re-read of Python < 3.13, and put this package on
+the workers' ``PYTHONPATH`` so tasks can import it from any working
+directory. spark-submit sessions keep Spark's stock worker daemon.
 """
 
 from __future__ import annotations
@@ -10,6 +15,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _add_package_to_worker_path() -> None:
+    """Prepend the package's parent directory to ``PYTHONPATH``, which the
+    JVM hands on to its Python workers; must run before the JVM starts."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in (os.path.abspath(p) for p in paths):
+        os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT] + paths)
 
 
 def get_spark(
@@ -43,6 +58,9 @@ def get_spark(
         # embedding dots; see analytics/common.ensure_jitable_codegen)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
+    if master.startswith("local"):
+        _add_package_to_worker_path()
+        b = b.config("spark.python.daemon.module", "web_crawler_spark.workerd")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

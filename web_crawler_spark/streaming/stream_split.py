@@ -155,10 +155,13 @@ def _assignment(
             (F.col("b.jaccard") >= JACCARD_T).alias("matched"),
         )
     )
-    assigned = best.join(F.broadcast(labels), "dup_of", "left").select(
-        "doc_id",
-        "matched",
-        F.coalesce("group_id", "dup_of").alias("group_id"),
+    # only a matched row looks up a corpus label: an unmatched arrival's
+    # dup_of is its own doc_id, which may collide with a corpus doc's id
+    lookup = labels.withColumnRenamed("dup_of", "label_key")
+    assigned = (
+        best.withColumn("label_key", F.when(F.col("matched"), F.col("dup_of")))
+        .join(F.broadcast(lookup), "label_key", "left")
+        .select("doc_id", "matched", F.coalesce("group_id", "dup_of").alias("group_id"))
     )
     bucket = F.expr(_BUCKET)
     return assigned.select(
