@@ -13,7 +13,7 @@ file, and the emitted line is size-checked against the tail budget before
 printing.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may run on),
      WCS_BENCH_CRAWL_URLS (synthetic-web size for the crawl-throughput leg).
 
 Each query executes end-to-end to a noop sink (full plan, no driver collect
@@ -148,7 +148,7 @@ def main() -> None:
     n_crawl = int(os.environ.get("WCS_BENCH_CRAWL_URLS", "20000"))
 
     from web_crawler_spark.analytics import LOCAL_QUERIES, QUERIES
-    from web_crawler_spark.session import get_spark
+    from web_crawler_spark.session import default_cpus, get_spark
 
     QUERIES = {**QUERIES, **LOCAL_QUERIES}  # headline spans both registry tiers
 
@@ -195,7 +195,7 @@ def main() -> None:
         "canary_sec": canary_sec(),
         "canary_start_sec": canary_start,
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": str(default_cpus()),
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"

@@ -73,7 +73,8 @@ def main() -> int:
     ap.add_argument("--budget", type=int, default=150_000)
     ap.add_argument("--universe", type=int, default=4_000_000)
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                                     or len(os.sched_getaffinity(0))))
     ap.add_argument("--tiers", nargs="*", default=["base", "bloom"],
                     choices=["base", "bloom", "cuckoo"],
                     help="prefilter arms to interleave per rep")

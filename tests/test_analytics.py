@@ -1205,6 +1205,37 @@ def test_cluster_labels_shared_between_split_and_clusters(spark):
         assert split[doc_id] == cid
 
 
+def test_cluster_labels_memo_follows_corpus_and_is_bounded(spark, tmp_path, monkeypatch):
+    """The label memo must rebuild when the corpus files change within a
+    session, and must not pin more than _LABELS_MEMO_MAX label tables."""
+    from web_crawler_spark.analytics import dedup
+
+    builds = []
+
+    def fake_pairs(spark_, sf_dir):
+        builds.append(sf_dir)
+        return spark_.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+
+    monkeypatch.setattr(dedup, "dedup_minhash_lsh", fake_pairs)
+    monkeypatch.setattr(dedup, "_LABELS_MEMO", {})
+    corpus = tmp_path / "c0"
+    corpus.mkdir()
+    (corpus / "documents.parquet").write_bytes(b"v1")
+    dedup._component_labels(spark, str(corpus))
+    dedup._component_labels(spark, str(corpus))
+    assert len(builds) == 1, "unchanged corpus must reuse the labels"
+    (corpus / "documents.parquet").write_bytes(b"version 2")
+    dedup._component_labels(spark, str(corpus))
+    assert len(builds) == 2, "rewritten corpus must rebuild the labels"
+    assert len(dedup._LABELS_MEMO) == 1, "the stale version must be evicted"
+    for i in range(1, dedup._LABELS_MEMO_MAX + 3):
+        d = tmp_path / f"c{i}"
+        d.mkdir()
+        (d / "documents.parquet").write_bytes(b"v1")
+        dedup._component_labels(spark, str(d))
+    assert len(dedup._LABELS_MEMO) == dedup._LABELS_MEMO_MAX
+
+
 def test_corpus_stats_rollup_totals(spark):
     """The data card's ROLLUP grand-total row must equal the corpus totals,
     and each source subtotal the sum of its language rows."""

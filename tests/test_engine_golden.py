@@ -75,6 +75,7 @@ def assert_matches_oracle(spark, run, res):
 def test_engine_matches_oracle_level_bfs(spark, tmp_path, golden):
     """budget=None → level-synchronous BFS rounds."""
     run = run_engine(spark, tmp_path)
+    assert run.prefetched == 0  # each level depends on the last one's admissions
     assert_matches_oracle(spark, run, golden)
 
 
@@ -157,6 +158,7 @@ def test_engine_per_host_politeness_invariants(spark, tmp_path):
     job = JobConfig(job_id=3, start_url="http://site0.test/p/0", max_pages=40, max_depth=3, delay=0.0)
     run = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "ph"),
                        budget=3, politeness_mode="per_host")
+    assert run.prefetched == 0  # per-host quotas depend on the last round
     _assert_per_host_invariants(spark, run)
 
 
@@ -421,3 +423,156 @@ def test_engine_resume_with_bloom(spark, tmp_path, golden):
     run2 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, resume=True,
                         use_bloom=True)
     assert_matches_oracle(spark, run2, golden)
+
+
+# Pipelined rounds: under a global budget, rounds whose seq range is already
+# admitted fetch on idle cores while an earlier round admits; their stage data
+# is written ahead and committed in round order.
+
+
+def _snapshot_dirs(table):
+    import os
+
+    return {os.path.join(table.dir, n) for n in os.listdir(table.dir) if n.startswith("snap-")}
+
+
+def _assert_manifest_rows(spark, run):
+    """Every snapshot's manifest ``rows`` equals its read-back row count."""
+    for name in ("stage", "admissions"):
+        schema = engine.STAGE_SCHEMA if name == "stage" else engine.FRONTIER_SCHEMA
+        for s in run.tables[name]._load():
+            assert s["rows"] == spark.read.schema(schema).parquet(s["path"]).count(), (name, s)
+
+
+def _stage_rows(spark, run):
+    return sorted((r.asDict(recursive=True) for r in run.read(spark, "stage").collect()),
+                  key=lambda d: d["seq"])
+
+
+def test_engine_prefetched_rounds_write_identical_stage_rows(spark, tmp_path, golden, monkeypatch):
+    """Rounds fetched ahead must write exactly the stage rows they write when
+    every round fetches in its turn — same URLs, ``round`` and
+    ``partition_id`` (4-row fetch tasks split each 7-URL round over two
+    partitions) — and the crawl must match the oracle."""
+    from web_crawler_spark.config import EngineTuning
+
+    t = EngineTuning(rows_per_partition=4)
+    piped = engine.crawl(spark, JOB, CFG, RULES, str(tmp_path / "piped"), budget=7, tuning=t)
+    assert piped.prefetched > 0
+    assert_matches_oracle(spark, piped, golden)
+    # when one round's two fetch tasks fill every core, no round runs ahead
+    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism", property(lambda self: 2))
+    serial = engine.crawl(spark, JOB, CFG, RULES, str(tmp_path / "serial"), budget=7, tuning=t)
+    assert serial.prefetched == 0
+    assert _stage_rows(spark, piped) == _stage_rows(spark, serial)
+
+
+def test_engine_compaction_waits_for_fetches_written_ahead(spark, tmp_path, golden, monkeypatch):
+    """Compaction expires the admissions dirs a fetch written ahead was
+    planned over, so it must wait for in-flight fetches. Fetches written
+    ahead are slowed here past a round's length: without the wait,
+    compaction would delete their input before they scan it."""
+    import threading
+    import time
+
+    from web_crawler_spark.catalog import SnapshotTable
+
+    fetches, compactions = [], []
+    write_data, compact = SnapshotTable.write_data, SnapshotTable.compact
+
+    def slow_write_data(self, df, round, **observe):
+        t0 = time.time()
+        if threading.current_thread() is not threading.main_thread():
+            time.sleep(1.0)
+        snap = write_data(self, df, round, **observe)
+        fetches.append((t0, time.time()))
+        return snap
+
+    def timed_compact(self, *a, **kw):
+        t0 = time.time()
+        out = compact(self, *a, **kw)
+        compactions.append((t0, time.time()))
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "write_data", slow_write_data)
+    monkeypatch.setattr(SnapshotTable, "compact", timed_compact)
+    run = engine.crawl(spark, JOB, CFG, RULES, str(tmp_path / "cpf"), budget=7, compact_every=2)
+    assert run.prefetched > 0 and compactions
+    for c0, c1 in compactions:
+        assert all(f1 <= c0 or f0 >= c1 for f0, f1 in fetches)
+    monkeypatch.undo()
+    assert_matches_oracle(spark, run, golden)
+    _assert_manifest_rows(spark, run)
+
+
+def test_engine_stopped_crawl_leaves_only_committed_snapshots(spark, tmp_path, golden, monkeypatch):
+    """A crawl stopped at max_rounds never fetches past it, so its stage dir
+    holds only snapshots the manifest references; a resume sweeps the
+    uncommitted data a crawl killed mid-prefetch leaves behind."""
+    import os
+
+    from web_crawler_spark.catalog import SnapshotTable
+
+    fetched = []
+    write_data = SnapshotTable.write_data
+
+    def recording_write_data(self, df, round, **observe):
+        if self.name == "stage":
+            fetched.append(round)
+        return write_data(self, df, round, **observe)
+
+    monkeypatch.setattr(SnapshotTable, "write_data", recording_write_data)
+    # budget 5: rounds 6-8 are already admitted when round 5 starts
+    path = str(tmp_path / "stop")
+    run1 = engine.crawl(spark, JOB, CFG, RULES, path, budget=5, max_rounds=5)
+    assert run1.rounds == 5 and run1.prefetched > 0
+    assert sorted(fetched) == [1, 2, 3, 4, 5]
+    monkeypatch.undo()
+    stage_t = run1.tables["stage"]
+    assert _snapshot_dirs(stage_t) == {s["path"] for s in stage_t._load()}
+    _assert_manifest_rows(spark, run1)
+    planted = stage_t.write_data(run1.read(spark, "stage").limit(3), 6)
+    run2 = engine.crawl(spark, JOB, CFG, RULES, path, budget=5, resume=True)
+    assert not os.path.exists(planted.path)
+    assert_matches_oracle(spark, run2, golden)
+
+
+def test_engine_failed_round_drops_fetches_written_ahead(spark, tmp_path, golden, monkeypatch):
+    """A round that fails must not leak the rounds fetched ahead of it:
+    crawl awaits them, shuts its pool down and deletes their uncommitted
+    data before it re-raises; the crawl then resumes to the oracle's."""
+    import threading
+
+    from web_crawler_spark.catalog import RunState, SnapshotTable
+
+    save = RunState.save
+
+    def failing_save(self, state):
+        if state["round"] == 6:  # rounds 7 and 8 are being fetched ahead
+            raise RuntimeError("injected state-save failure")
+        save(self, state)
+
+    monkeypatch.setattr(RunState, "save", failing_save)
+    path = str(tmp_path / "fail")
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected"):
+        engine.crawl(spark, JOB, CFG, RULES, path, budget=5)
+    assert set(threading.enumerate()) <= before
+    stage_t = SnapshotTable(path, "stage")
+    assert [s["round"] for s in stage_t._load()] == [1, 2, 3, 4, 5, 6]
+    assert _snapshot_dirs(stage_t) == {s["path"] for s in stage_t._load()}
+    monkeypatch.undo()
+    run = engine.crawl(spark, JOB, CFG, RULES, path, budget=5, resume=True)
+    assert_matches_oracle(spark, run, golden)
+
+
+def test_snapshot_rows_of_empty_write(spark, tmp_path):
+    """The manifest records each write's observed row count, zero included."""
+    from web_crawler_spark.catalog import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path), "t")
+    assert t.write(spark.range(5), 1).rows == 5
+    assert t.write(spark.range(0), 2).rows == 0
+    assert [s["rows"] for s in t._load()] == [5, 0]
+    for s in t._load():
+        assert s["rows"] == spark.read.schema("id long").parquet(s["path"]).count()

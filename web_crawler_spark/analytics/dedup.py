@@ -24,6 +24,8 @@ touches candidate pairs. Simhash block join is 4 rows/doc, uniformly hashed.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -625,18 +627,38 @@ def _star_labels(edges: DataFrame) -> DataFrame:
 # The first consumer materializes the labels once (eager localCheckpoint:
 # the star loop has already executed its rounds; this pins the final join
 # too); every later consumer in the same session reads the checkpointed
-# blocks. Keyed by (applicationId, sf_dir) so a new session or a different
-# corpus rebuilds; stale sessions' entries are evicted on access because a
-# dead session's checkpoint blocks are unreadable anyway.
-_LABELS_MEMO: dict[tuple[str, str], DataFrame] = {}
+# blocks. Keyed by (applicationId, sf_dir, corpus fingerprint) so a new
+# session, a different corpus or a rewritten one rebuilds. Entries of a dead
+# session (its checkpoint blocks are unreadable) or of an older version of
+# the same corpus are evicted on access, and at most _LABELS_MEMO_MAX
+# entries pin checkpoint blocks at once (oldest evicted first).
+_LABELS_MEMO: dict[tuple, DataFrame] = {}
+_LABELS_MEMO_MAX = 4
+
+
+def _corpus_fingerprint(sf_dir: str) -> tuple:
+    """(mtime_ns, size) of every file of the documents table the labels
+    derive from; empty when the path is not on the local file system."""
+    root = os.path.join(sf_dir, "documents.parquet")
+    if os.path.isfile(root):
+        paths = [root]
+    else:
+        paths = sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+    fingerprint = []
+    for p in paths:
+        st = os.stat(p)
+        fingerprint.append((p, st.st_mtime_ns, st.st_size))
+    return tuple(fingerprint)
 
 
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
+    key = (app, sf_dir, _corpus_fingerprint(sf_dir))
     if key not in _LABELS_MEMO:
-        for k in [k for k in _LABELS_MEMO if k[0] != app]:
+        for k in [k for k in _LABELS_MEMO if k[0] != app or k[1] == sf_dir]:
             del _LABELS_MEMO[k]
+        while len(_LABELS_MEMO) >= _LABELS_MEMO_MAX:
+            del _LABELS_MEMO[next(iter(_LABELS_MEMO))]
         pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
         _LABELS_MEMO[key] = _star_labels(pairs).localCheckpoint(eager=True)
     return _LABELS_MEMO[key]

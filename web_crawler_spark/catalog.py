@@ -8,7 +8,9 @@ module provides the same contract on parquet:
 
 - a table is a directory of immutable snapshot dirs plus a JSON manifest
 - a commit writes data first, then atomically renames a tmp manifest over the
-  old one (readers never see partial state)
+  old one (readers never see partial state); the two steps are separate
+  calls, so data can be written ahead of (and concurrently with) commits
+  that must land in round order
 - ``append`` adds a snapshot; ``overwrite`` adds a snapshot that supersedes all
   prior ones (Iceberg's dynamic overwrite)
 - resume = read the manifest as of the last committed round
@@ -24,19 +26,31 @@ import os
 import shutil
 import tempfile
 import time
-from dataclasses import dataclass
+import uuid
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
 class Snapshot:
-    snapshot_id: int
+    snapshot_id: int  # -1 until committed
     mode: str  # 'append' | 'overwrite'
     round: int
     path: str
     rows: int
+    observed: dict = field(default_factory=dict)  # extra aggregates of the write
+
+
+def _write_parquet(df: DataFrame, path: str, **observe: Column) -> dict:
+    """Write *df* to *path*; return its row count (``rows``) and each
+    *observe* aggregate, collected by the write itself (no extra job)."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in observe.items()]
+    df.observe(obs, *metrics).write.mode("errorifexists").parquet(path)
+    return dict(obs.get)
 
 
 class SnapshotTable:
@@ -62,18 +76,39 @@ class SnapshotTable:
             json.dump({"snapshots": snapshots, "committed_at": time.time()}, f)
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
+    def _new_path(self, round: int) -> str:
+        # named by round and a random token, not by snapshot id: data may be
+        # written before earlier rounds commit, and a crashed write's orphan
+        # can never collide with a later write's dir
+        return os.path.join(self.dir, f"snap-r{round:06d}-{uuid.uuid4().hex[:12]}")
+
     # -- public API --------------------------------------------------------
-    def write(self, df: DataFrame, round: int, mode: str = "append") -> Snapshot:
+    def write_data(self, df: DataFrame, round: int, **observe: Column) -> Snapshot:
+        """Write *df* as an uncommitted snapshot: invisible to readers until
+        :meth:`commit`, and swept as an orphan by :meth:`rollback_to_round`
+        if never committed. Safe to call from several threads at once. Each
+        *observe* aggregate lands in the result's ``observed``."""
+        path = self._new_path(round)
+        observed = _write_parquet(df, path, **observe)
+        rows = observed.pop("rows")
+        return Snapshot(-1, "append", round, path, rows, observed)
+
+    def commit(self, snap: Snapshot, mode: str = "append") -> Snapshot:
+        """Make a :meth:`write_data` snapshot visible; allocates its id.
+        Commits must come from one thread, in round order."""
         snaps = self._load()
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
-        path = os.path.join(self.dir, f"snap-{sid:06d}")
-        df.write.mode("errorifexists").parquet(path)
-        rows = -1  # avoid an extra count job; fill lazily if needed
-        snaps.append(
-            {"snapshot_id": sid, "mode": mode, "round": round, "path": path, "rows": rows}
-        )
+        snaps.append({"snapshot_id": sid, "mode": mode, "round": snap.round,
+                      "path": snap.path, "rows": snap.rows})
         self._commit(snaps)
-        return Snapshot(sid, mode, round, path, rows)
+        return replace(snap, snapshot_id=sid, mode=mode)
+
+    def discard(self, snap: Snapshot) -> None:
+        """Delete an uncommitted :meth:`write_data` snapshot."""
+        shutil.rmtree(snap.path, ignore_errors=True)
+
+    def write(self, df: DataFrame, round: int, mode: str = "append") -> Snapshot:
+        return self.commit(self.write_data(df, round), mode)
 
     def live_paths(self, as_of_round: Optional[int] = None) -> list[str]:
         """Snapshot paths contributing to the current (or as-of-round) state."""
@@ -155,10 +190,8 @@ class SnapshotTable:
         if target_partitions is None:
             target_partitions = spark.sparkContext.defaultParallelism
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
-        # "-c" namespace: a crash between data write and manifest commit
-        # orphans this dir without ever colliding with a future write()'s
-        # snap-{sid} path (the manifest — and thus sid reuse — is unchanged)
-        merged_path = os.path.join(self.dir, f"snap-{sid:06d}-c")
+        merged_round = max(s["round"] for s in prefix)
+        merged_path = self._new_path(merged_round)
         if cluster_by:
             # preserve key-clustering so min/max parquet stats keep pruning
             # reads (e.g. the derived frontier's `seq >= watermark` filter
@@ -166,32 +199,33 @@ class SnapshotTable:
             df = df.repartitionByRange(target_partitions, *cluster_by).sortWithinPartitions(*cluster_by)
         else:
             df = df.repartition(target_partitions)
-        df.write.mode("errorifexists").parquet(merged_path)
+        rows = _write_parquet(df, merged_path)["rows"]
         merged = {
             "snapshot_id": sid,
             "mode": prefix[0]["mode"],
-            "round": max(s["round"] for s in prefix),
+            "round": merged_round,
             "path": merged_path,
-            "rows": -1,
-            "compacted_through": max(s["round"] for s in prefix),
+            "rows": rows,
+            "compacted_through": merged_round,
         }
         remaining = live[len(prefix):]
         self._commit([merged] + remaining)
         dead = [s for s in snaps if s not in live]  # superseded by overwrite
-        for s in prefix + dead:  # expire AFTER the manifest swap — no reader race
+        # expire AFTER the manifest swap, so no new read lists these dirs;
+        # the caller must first drain jobs already planned over them
+        for s in prefix + dead:
             shutil.rmtree(s["path"], ignore_errors=True)
         return True
 
     def rollback_to_round(self, round: int) -> None:
         """Drop snapshots committed after *round* (crash-resume cleanup).
 
-        Also sweeps ORPHAN snapshot directories: write() writes the parquet
-        dir before the manifest commit, so a crash between the two leaves a
-        snap-* dir the manifest never references — the next write would
-        reuse its id and fail errorifexists (found by SIGKILLing a
-        spark-submit run mid-round and resuming). Same model as Iceberg:
-        uncommitted data files are orphans, removed by maintenance before
-        their names can collide; the manifest is the sole source of truth.
+        Also sweeps ORPHAN snapshot directories: data is written before the
+        manifest commit, so a crash between the two (or a crawl stopped with
+        rounds written ahead of their commit) leaves a snap-* dir the
+        manifest never references. Same model as Iceberg: uncommitted data
+        files are orphans, removed by maintenance; the manifest is the sole
+        source of truth.
         """
         snaps = self._load()
         keep = [s for s in snaps if s["round"] <= round]

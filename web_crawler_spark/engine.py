@@ -50,12 +50,27 @@ Scale design (the 10^10-frontier story):
 - politeness is a virtual-clock budget (the reference sleeps ``delay`` seconds
   between requests, crawler.py:637-638 ⇒ ≤ round_seconds/delay fetches per
   round), so ordering is timing-independent and reproducible.
+- pipelined rounds: under the global budget, round r+k fetches exactly the
+  seq range [lo + n_sched + (k-1)·budget, + budget). When that range is
+  already admitted, its fetch stage does not depend on round r's admissions,
+  so it runs on idle cores (a small driver thread pool, depth
+  defaultParallelism // P - 1, 0 when one round fills every core) while
+  round r admits. The data is written ahead; the stage snapshot commits in
+  round order, so every round still fetches the same URLs with the same
+  ``round`` and ``partition_id``. Only wall-clock overlap changes, which the
+  virtual clock never modelled. per_host and unbudgeted rounds depend on the
+  previous round's admissions and run one at a time.
+- admission is one write: the stage write observes an upper bound on the
+  candidates (links of parsed pages below max_depth), which picks the rank
+  strategy, and the admissions write's observed row count is the admission
+  count — no separate count job.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from typing import Optional
 
@@ -85,7 +100,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import RunState, SnapshotTable
+from .catalog import RunState, Snapshot, SnapshotTable
 from .config import DEFAULT_TUNING, EngineTuning, JobConfig
 from .core.robots import RulesByHost
 from .core.webgen import WebConfig
@@ -122,6 +137,7 @@ class CrawlRun:
     tables: dict[str, SnapshotTable]
     state: RunState
     rounds: int = 0
+    prefetched: int = 0  # rounds whose fetch stage ran while an earlier round admitted
 
     def read(
         self, spark: SparkSession, name: str, as_of_round: Optional[int] = None
@@ -442,165 +458,209 @@ def crawl(
     bloom_state: Optional[BloomFilter64] = None
     bloom_bcast = None
 
-    while rnd < max_rounds and pending_count > 0:
-        rnd += 1
-        tm = _Timer(rnd)
-        adm = tables["admissions"].read(spark, schema=FRONTIER_SCHEMA)
-        tm.mark("adm_read")
-        if adm is None:
-            break
-        if frontier_mode == "derived":
-            lo = next_seq - pending_count
-            pending = adm.filter(F.col("seq") >= lo)
-        else:
-            wm_agg = _host_wm_agg(spark, tables["host_wm"])
-            pending = _apply_host_watermarks(adm, wm_agg, seen_count, tuning)
-        # size the fetch stage on what will actually be SCHEDULED this round,
-        # not the whole pending frontier (with a small budget the two differ
-        # by orders of magnitude)
-        est = pending_count
-        if budget is not None and politeness_mode == "global":
-            est = min(pending_count, budget)
-        rpp = tuning.rows_per_partition
-        P = min(P_max, max(1, (est + rpp - 1) // rpp))
+    # candidate upper bound, observed by the stage write itself
+    n_links_col = F.sum(
+        F.when((F.col("outcome") == "parsed") & (F.col("depth") < job.max_depth),
+               F.size("links"))
+    )
 
-        # ---- politeness selection (FIFO chunk or per-host quota) ----------
-        if budget is None:
-            scheduled = pending
-            n_sched = pending_count
-        elif politeness_mode == "global":
-            # budget chunk = pure parallel range filter on the contiguous
-            # pending seq interval: no global sort, no single-reducer
-            # TakeOrdered, no anti-join (those serialized every round and
-            # capped scaling efficiency at ~0.4 before this)
-            lim = (next_seq - pending_count) + budget
-            scheduled = pending.filter(F.col("seq") < lim)
-            n_sched = min(budget, pending_count)
-        else:  # per_host: window rank within host by priority (seq)
-            w = Window.partitionBy("host").orderBy("seq")
-            ranked = pending.withColumn("_hr", F.row_number().over(w))
-            scheduled = ranked.filter(F.col("_hr") <= budget).drop("_hr")
-            n_sched = None  # resolved below from the stage parquet
+    def fetch_stage(r: int, scheduled: DataFrame, P: int) -> Snapshot:
+        """Round *r*'s fused gate+fetch+parse stage, written but not committed.
 
-        # ---- fused gate+fetch+parse stage (salt-spread partitions defeat
-        # hot-host skew); ONE write, everything downstream is a projection ---
-        # uniform per-row spread: hashing (host_bucket, salt) gives only
-        # n_hosts*n_salts distinct keys — lumpy at high parallelism; url_hash
-        # is per-row uniform, so the slowest fetch task tracks the mean.
-        # (host_bucket/salt stay on the rows for the table partition spec.)
-        # a single-partition round needs no exchange: coalesce(1) runs the
-        # fetch in the scan's one task
+        Salt-spread partitions defeat hot-host skew: hashing (host_bucket,
+        salt) gives only n_hosts*n_salts distinct keys — lumpy at high
+        parallelism; url_hash is per-row uniform, so the slowest fetch task
+        tracks the mean (host_bucket/salt stay on the rows for the table
+        partition spec). A single-partition round needs no exchange:
+        coalesce(1) runs the fetch in the scan's one task."""
         spread = scheduled.coalesce(1) if P == 1 else scheduled.repartition(P, "url_hash")
         stage_df = (
             spread.mapInPandas(fetch_fn, udfs.FETCHED_SCHEMA)
-            .withColumn("round", F.lit(rnd))
+            .withColumn("round", F.lit(r))
         )
-        snap = tables["stage"].write(stage_df, rnd)
-        tm.mark("stage_write")
-        stage = spark.read.schema(STAGE_SCHEMA).parquet(snap.path)
-        if n_sched is None:
-            # per_host: one tiny distributed agg over THIS round's just-written
-            # stage parquet (O(scheduled) rows, O(active hosts) output)
-            # advances each host's watermark — APPENDED to the host_wm
-            # snapshot table, never collected to the driver (the read-time
-            # groupBy(host).max(wm) folds rounds together). n_sched is a
-            # parquet-footer count. The whole frontier update is these two
-            # metadata-cheap jobs; the driver carries zero per-host state.
-            wm_delta = stage.groupBy("host").agg(F.max("seq").alias("wm"))
-            tables["host_wm"].write(wm_delta, rnd)
-            n_sched = stage.count()
+        return tables["stage"].write_data(stage_df, r, n_links=n_links_col)
 
-        # ---- candidate children → dedup → anti-join seen → admission -------
-        n_admit_room = job.max_pages - seen_count
-        admitted_count = 0
-        if n_admit_room > 0:
-            candidates = (
-                _links_of(stage, job.job_id)
-                .filter(F.col("from_depth") < job.max_depth)
-                .select(
-                    F.col("to_url").alias("url"),
-                    (F.col("from_depth") + 1).alias("depth"),
-                    "parent_seq", "link_idx",
-                )
-            )
-            # within-batch first-occurrence dedup (crawler.py:429-430 analog
-            # across pages: the earliest (parent_seq, link_idx) wins the slot).
-            # min(struct) instead of a row_number window: structs compare
-            # lexicographically, so this is the same winner — but it partial-
-            # aggregates map-side, shuffling only unique URLs per map partition
-            # instead of sorting every candidate row.
-            fresh = (
-                candidates.groupBy("url")
-                .agg(F.min(F.struct("parent_seq", "link_idx", "depth")).alias("_m"))
-                .select(
-                    "url",
-                    F.col("_m.depth").alias("depth"),
-                    F.col("_m.parent_seq").alias("parent_seq"),
-                    F.col("_m.link_idx").alias("link_idx"),
-                )
-            )
+    def fetch_tasks(n_rows: int) -> int:
+        rpp = tuning.rows_per_partition
+        return min(P_max, max(1, (n_rows + rpp - 1) // rpp))
 
-            seen_df = run.read(spark, "seen")
-            tm.mark("seen_read")
-            if use_bloom:
-                if bloom_state is None:
-                    # first bloom use in this process (fresh start: seed only;
-                    # resume: the restored seen table) — build once, sized for
-                    # the job's admission ceiling so the same bitmap serves
-                    # every round and additions are incremental
-                    bloom_state = _build_bloom(seen_df, job.max_pages, tuning)
-                if bloom_bcast is not None:
-                    bloom_bcast.unpersist(blocking=False)
-                bloom_bcast = spark.sparkContext.broadcast(bloom_state.to_bytes())
-                bcast = bloom_bcast
-                k = bloom_state.k
+    # pipelined rounds (global budget only): while a round admits, fetch
+    # later rounds whose whole seq range is already admitted on idle cores
+    depth = 0
+    if budget is not None and politeness_mode == "global":
+        P_full = fetch_tasks(budget)
+        depth = max(0, spark.sparkContext.defaultParallelism // P_full - 1)
+    pool = ThreadPoolExecutor(depth, thread_name_prefix="wcs-prefetch") if depth else None
+    ahead: dict[int, Future] = {}  # round -> its uncommitted stage snapshot
 
-                def might_contain(h):
-                    import pandas as pd
-
-                    f = BloomFilter64.from_bytes(bcast.value, k)
-                    return pd.Series(f.might_contain(h.to_numpy()))
-
-                mc_udf = F.pandas_udf(might_contain, "boolean")
-                fresh = fresh.withColumn("_mc", mc_udf(F.xxhash64("url")))
-                # bloom says definitely-new → bypass the anti-join shuffle
-                surely_new = fresh.filter(~F.col("_mc")).drop("_mc")
-                maybe_seen = fresh.filter(F.col("_mc")).drop("_mc")
-                new_urls = surely_new.unionByName(
-                    maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
-                                    F.col("url") == F.col("_su"), "left_anti")
-                )
-            elif use_cuckoo:
-                # per-partition cuckoo prefilter (north_star): co-partition
-                # candidates and seen rows by a hash bucket, build a local
-                # cuckoo filter from that partition's seen hashes, and route
-                # only possible members into the exact anti-join. Unlike the
-                # bloom path nothing is broadcast — this is the variant for a
-                # seen set too large even for a broadcast bitmap.
-                flagged = _cuckoo_flag(fresh, seen_df)
-                surely_new = flagged.filter(~F.col("_mc")).drop("_mc")
-                maybe_seen = flagged.filter(F.col("_mc")).drop("_mc")
-                new_urls = surely_new.unionByName(
-                    maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
-                                    F.col("url") == F.col("_su"), "left_anti")
-                )
+    try:
+        while rnd < max_rounds and pending_count > 0:
+            rnd += 1
+            tm = _Timer(rnd)
+            adm = tables["admissions"].read(spark, schema=FRONTIER_SCHEMA)
+            tm.mark("adm_read")
+            if adm is None:
+                break
+            lo = next_seq - pending_count
+            if frontier_mode == "derived":
+                pending = adm.filter(F.col("seq") >= lo)
             else:
-                new_urls = fresh.join(
-                    seen_df.select(F.col("url").alias("_su")),
-                    F.col("url") == F.col("_su"), "left_anti",
+                wm_agg = _host_wm_agg(spark, tables["host_wm"])
+                pending = _apply_host_watermarks(adm, wm_agg, seen_count, tuning)
+            # size the fetch stage on what will actually be SCHEDULED this round,
+            # not the whole pending frontier (with a small budget the two differ
+            # by orders of magnitude)
+            est = pending_count
+            if budget is not None and politeness_mode == "global":
+                est = min(pending_count, budget)
+            P = fetch_tasks(est)
+
+            # ---- politeness selection (FIFO chunk or per-host quota) ----------
+            if budget is None:
+                scheduled = pending
+                n_sched = pending_count
+            elif politeness_mode == "global":
+                # budget chunk = pure parallel range filter on the contiguous
+                # pending seq interval: no global sort, no single-reducer
+                # TakeOrdered, no anti-join (those serialized every round and
+                # capped scaling efficiency at ~0.4 before this)
+                scheduled = pending.filter(F.col("seq") < lo + budget)
+                n_sched = min(budget, pending_count)
+                # round rnd+k schedules exactly [k_lo, k_lo + budget) once
+                # this round's range is consumed; when that range is already
+                # admitted its fetch cannot depend on this round's admissions
+                for k in range(1, depth + 1):
+                    k_lo = lo + n_sched + (k - 1) * budget
+                    if rnd + k > max_rounds or k_lo + budget > next_seq:
+                        break
+                    if rnd + k not in ahead:
+                        k_sched = adm.filter(F.col("seq") >= k_lo).filter(F.col("seq") < k_lo + budget)
+                        ahead[rnd + k] = pool.submit(fetch_stage, rnd + k, k_sched, P_full)
+            else:  # per_host: window rank within host by priority (seq)
+                w = Window.partitionBy("host").orderBy("seq")
+                ranked = pending.withColumn("_hr", F.row_number().over(w))
+                scheduled = ranked.filter(F.col("_hr") <= budget).drop("_hr")
+                n_sched = None  # resolved below from the stage write
+
+            # ---- fused gate+fetch+parse stage: ONE write, everything
+            # downstream is a projection ------------------------------------
+            if rnd in ahead:
+                staged = ahead.pop(rnd).result()
+                run.prefetched += 1
+            else:
+                staged = fetch_stage(rnd, scheduled, P)
+            snap = tables["stage"].commit(staged)
+            tm.mark("stage_write")
+            stage = spark.read.schema(STAGE_SCHEMA).parquet(snap.path)
+            if n_sched is None:
+                # per_host: one tiny distributed agg over THIS round's just-written
+                # stage parquet (O(scheduled) rows, O(active hosts) output)
+                # advances each host's watermark — APPENDED to the host_wm
+                # snapshot table, never collected to the driver (the read-time
+                # groupBy(host).max(wm) folds rounds together). n_sched is the
+                # write's observed row count (one stage row per scheduled URL).
+                # The whole frontier update is this one metadata-cheap job;
+                # the driver carries zero per-host state.
+                wm_delta = stage.groupBy("host").agg(F.max("seq").alias("wm"))
+                tables["host_wm"].write(wm_delta, rnd)
+                n_sched = snap.rows
+
+            # ---- candidate children → dedup → anti-join seen → admission -------
+            n_admit_room = job.max_pages - seen_count
+            # every fresh candidate is a link of a parsed page below max_depth
+            n_links = snap.observed["n_links"] or 0
+            admitted_count = 0
+            if n_admit_room > 0 and n_links > 0:
+                candidates = (
+                    _links_of(stage, job.job_id)
+                    .filter(F.col("from_depth") < job.max_depth)
+                    .select(
+                        F.col("to_url").alias("url"),
+                        (F.col("from_depth") + 1).alias("depth"),
+                        "parent_seq", "link_idx",
+                    )
+                )
+                # within-batch first-occurrence dedup (crawler.py:429-430 analog
+                # across pages: the earliest (parent_seq, link_idx) wins the slot).
+                # min(struct) instead of a row_number window: structs compare
+                # lexicographically, so this is the same winner — but it partial-
+                # aggregates map-side, shuffling only unique URLs per map partition
+                # instead of sorting every candidate row.
+                fresh = (
+                    candidates.groupBy("url")
+                    .agg(F.min(F.struct("parent_seq", "link_idx", "depth")).alias("_m"))
+                    .select(
+                        "url",
+                        F.col("_m.depth").alias("depth"),
+                        F.col("_m.parent_seq").alias("parent_seq"),
+                        F.col("_m.link_idx").alias("link_idx"),
+                    )
                 )
 
-            # eager local checkpoint: materializes once and TRUNCATES the
-            # candidate lineage, so the rank/write below can never silently
-            # recompute the explode+anti-join pipeline (a plain persist can be
-            # evicted and did, catastrophically, on large rounds)
-            new_urls = new_urls.localCheckpoint(eager=True)
-            n_new = new_urls.count()
-            tm.mark("fresh_count")
-            if n_new > 0:
-                if n_new <= tuning.small_rank_threshold:
-                    # deliberate single-reducer rank for small rounds (3 jobs
-                    # → 1): one coalesced partition, sort inside it, number
+                # the round-start admissions read IS the seen set
+                seen_df = adm
+                if use_bloom:
+                    if bloom_state is None:
+                        # first bloom use in this process (fresh start: seed only;
+                        # resume: the restored seen table) — build once, sized for
+                        # the job's admission ceiling so the same bitmap serves
+                        # every round and additions are incremental
+                        bloom_state = _build_bloom(seen_df, job.max_pages, tuning)
+                    if bloom_bcast is not None:
+                        bloom_bcast.unpersist(blocking=False)
+                    bloom_bcast = spark.sparkContext.broadcast(bloom_state.to_bytes())
+                    bcast = bloom_bcast
+                    k = bloom_state.k
+
+                    def might_contain(h):
+                        import pandas as pd
+
+                        f = BloomFilter64.from_bytes(bcast.value, k)
+                        return pd.Series(f.might_contain(h.to_numpy()))
+
+                    mc_udf = F.pandas_udf(might_contain, "boolean")
+                    fresh = fresh.withColumn("_mc", mc_udf(F.xxhash64("url")))
+                    # bloom says definitely-new → bypass the anti-join shuffle
+                    surely_new = fresh.filter(~F.col("_mc")).drop("_mc")
+                    maybe_seen = fresh.filter(F.col("_mc")).drop("_mc")
+                    new_urls = surely_new.unionByName(
+                        maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
+                                        F.col("url") == F.col("_su"), "left_anti")
+                    )
+                elif use_cuckoo:
+                    # per-partition cuckoo prefilter (north_star): co-partition
+                    # candidates and seen rows by a hash bucket, build a local
+                    # cuckoo filter from that partition's seen hashes, and route
+                    # only possible members into the exact anti-join. Unlike the
+                    # bloom path nothing is broadcast — this is the variant for a
+                    # seen set too large even for a broadcast bitmap.
+                    flagged = _cuckoo_flag(fresh, seen_df)
+                    surely_new = flagged.filter(~F.col("_mc")).drop("_mc")
+                    maybe_seen = flagged.filter(F.col("_mc")).drop("_mc")
+                    new_urls = surely_new.unionByName(
+                        maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
+                                        F.col("url") == F.col("_su"), "left_anti")
+                    )
+                else:
+                    new_urls = fresh.join(
+                        seen_df.select(F.col("url").alias("_su")),
+                        F.col("url") == F.col("_su"), "left_anti",
+                    )
+
+                small = n_links <= tuning.small_rank_threshold
+                if use_bloom or use_cuckoo or not small:
+                    # eager local checkpoint where the candidates are read
+                    # more than once (the range rank's sampling + sort, the
+                    # prefilters' two branches and the bloom add): it
+                    # materializes once and TRUNCATES the candidate lineage,
+                    # so those reads can never silently recompute the
+                    # explode+anti-join pipeline (a plain persist can be
+                    # evicted and did, catastrophically, on large rounds)
+                    new_urls = new_urls.localCheckpoint(eager=True)
+                    tm.mark("fresh_checkpoint")
+                if small:
+                    # deliberate single-reducer rank for small rounds (n_new <=
+                    # n_links): one coalesced partition, sort inside it, number
                     # rows in iterator order. No WindowExec at all — ids in a
                     # single partition are 0..n-1 by definition
                     ranked = (
@@ -621,51 +681,68 @@ def crawl(
                     admitted.select("job_id", "seq", "url", "depth", "parent_seq", "link_idx"),
                     rnd,
                 )
-                tables["admissions"].write(admitted_f, rnd)
+                # one job: the write's observed row count is the admission
+                # count; a round that admits nothing commits no snapshot
+                adm_snap = tables["admissions"].write_data(admitted_f, rnd)
+                admitted_count = adm_snap.rows
+                if admitted_count:
+                    tables["admissions"].commit(adm_snap)
+                else:
+                    tables["admissions"].discard(adm_snap)
                 tm.mark("admissions_write")
-                admitted_count = min(n_new, n_admit_room)
-                if use_bloom and bloom_state is not None:
+                if use_bloom and admitted_count:
                     # O(admitted) incremental update (admitted_f re-projects
                     # from the checkpointed new_urls — no recompute of the
                     # candidate pipeline)
                     _bloom_add_df(bloom_state, admitted_f)
                     tm.mark("bloom_add")
 
+            # ---- next pending frontier: nothing to write in ANY mode — the
+            # (global or per-host) watermark in the round state IS the frontier
+            # update; admissions stay append-only
+            pending_count = (pending_count - n_sched) + admitted_count
 
-        # ---- next pending frontier: nothing to write in ANY mode — the
-        # (global or per-host) watermark in the round state IS the frontier
-        # update; admissions stay append-only
-        pending_count = (pending_count - n_sched) + admitted_count
-
-        # ---- commit round state (the resume point) -------------------------
-        next_seq += admitted_count
-        seen_count += admitted_count
-        st = {
-            "round": rnd, "next_seq": next_seq, "seen_count": seen_count,
-            "pending_count": pending_count, "frontier": frontier_mode,
-        }
-        state_store.save(st)
-        run.rounds = rnd
-        tm.mark("frontier_commit")
-        if compact_every and rnd % compact_every == 0:
-            # maintenance (Iceberg rewrite_data_files): bound live file count
-            # of the append-per-round tables. Runs AFTER the state save, so
-            # every merged round is completed — crash-resume's
-            # rollback_to_round(saved round) can never drop merged data.
-            tables["stage"].compact(
-                spark, up_to_round=rnd, schema=STAGE_SCHEMA, cluster_by=["round", "seq"]
-            )
-            tables["admissions"].compact(
-                spark, up_to_round=rnd, schema=FRONTIER_SCHEMA, cluster_by=["seq"]
-            )
-            if tables["host_wm"].exists():
-                # host-clustered so the read-time groupBy(host).max(wm)
-                # partial-aggregates within row groups
-                tables["host_wm"].compact(
-                    spark, up_to_round=rnd, schema=HOST_WM_SCHEMA, cluster_by=["host"]
+            # ---- commit round state (the resume point) -------------------------
+            next_seq += admitted_count
+            seen_count += admitted_count
+            st = {
+                "round": rnd, "next_seq": next_seq, "seen_count": seen_count,
+                "pending_count": pending_count, "frontier": frontier_mode,
+            }
+            state_store.save(st)
+            run.rounds = rnd
+            tm.mark("frontier_commit")
+            if compact_every and rnd % compact_every == 0:
+                # maintenance (Iceberg rewrite_data_files): bound live file count
+                # of the append-per-round tables. Runs AFTER the state save, so
+                # every merged round is completed — crash-resume's
+                # rollback_to_round(saved round) can never drop merged data.
+                # Fetches written ahead were planned over admissions dirs
+                # this expires: let them finish first.
+                wait(ahead.values())
+                tables["stage"].compact(
+                    spark, up_to_round=rnd, schema=STAGE_SCHEMA, cluster_by=["round", "seq"]
                 )
-            tm.mark("compact")
-        tm.report()
+                tables["admissions"].compact(
+                    spark, up_to_round=rnd, schema=FRONTIER_SCHEMA, cluster_by=["seq"]
+                )
+                if tables["host_wm"].exists():
+                    # host-clustered so the read-time groupBy(host).max(wm)
+                    # partial-aggregates within row groups
+                    tables["host_wm"].compact(
+                        spark, up_to_round=rnd, schema=HOST_WM_SCHEMA, cluster_by=["host"]
+                    )
+                tm.mark("compact")
+            tm.report()
+    finally:
+        # a round is only fetched ahead if the crawl will reach it, so this
+        # is empty unless the crawl failed: await those jobs and drop the
+        # data they wrote (resume would sweep it as orphans anyway)
+        if pool is not None:
+            pool.shutdown(wait=True)
+        for fut in ahead.values():
+            if fut.exception() is None:
+                tables["stage"].discard(fut.result())
 
     return run
 

@@ -27,13 +27,19 @@ def _add_package_to_worker_path() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT] + paths)
 
 
+def default_cpus() -> int:
+    """Cores for local sessions: ``SPARK_GRAFT_CPUS`` if set, else the cores
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "web_crawler_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism in local mode; a real cluster would size this to
