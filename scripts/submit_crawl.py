@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("--delay", type=float, default=0.0)
     ap.add_argument("--budget", type=int, default=None)
     ap.add_argument("--per-host", action="store_true")
-    ap.add_argument("--bloom", action="store_true")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--compact-every", type=int, default=None,
                     help="merge+expire completed-round snapshots every k rounds")
@@ -69,7 +68,6 @@ def main() -> None:
         spark, job, cfg, rules, args.storage,
         budget=budget,
         politeness_mode="per_host" if args.per_host else "global",
-        use_bloom=args.bloom,
         resume=args.resume,
         compact_every=args.compact_every,
     )

@@ -218,13 +218,10 @@ def test_oracle_cap_binds_admission_not_processing():
 
 def test_engine_tuning_one_place():
     """Every engine sizing knob derives from config.EngineTuning — no stray
-    module constants remain, and bloom capacity scales from the job's
-    admission ceiling with a floor."""
+    module constants remain."""
     from web_crawler_spark.config import DEFAULT_TUNING, EngineTuning
 
     t = DEFAULT_TUNING
-    assert t.bloom_capacity(100) == t.bloom_min_capacity  # floor binds
-    assert t.bloom_capacity(10**7) == 2 * 10**7  # factor× ceiling
     # overrides are wholesale and frozen (no mutation of the shared default)
     custom = EngineTuning(rows_per_partition=64, small_rank_threshold=1)
     assert custom.rows_per_partition == 64 and t.rows_per_partition == 512

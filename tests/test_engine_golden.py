@@ -87,30 +87,17 @@ def test_engine_matches_oracle_with_politeness_budget(spark, tmp_path, golden):
     assert_matches_oracle(spark, run, golden)
 
 
-def test_engine_bloom_prefilter_changes_nothing(spark, tmp_path, golden):
-    """Bloom false positives may only cost time, never results (SURVEY §5.3)."""
-    run = run_engine(spark, tmp_path, use_bloom=True)
-    assert_matches_oracle(spark, run, golden)
-
-
-def test_engine_cuckoo_prefilter_changes_nothing(spark, tmp_path, golden):
-    """Per-partition cuckoo prefilter (north_star) — accelerator only; the
-    exact anti-join remains the source of truth."""
-    run = run_engine(spark, tmp_path, use_cuckoo=True)
-    assert_matches_oracle(spark, run, golden)
-
-
 def test_engine_tuning_alternate_branches_change_nothing(spark, tmp_path, golden):
     """Force every tuning-gated scale branch the defaults never hit at test
     size — two-phase range rank (small_rank_threshold=0), non-broadcast
-    AQE-planned watermark join (wm_broadcast_max_hosts=0), 8-row fetch tasks,
-    and a floor-sized bloom — and require bit-identical results. Sizing knobs
-    may only ever cost time, never change the crawl (config.EngineTuning)."""
+    AQE-planned watermark join (wm_broadcast_max_hosts=0) and 8-row fetch
+    tasks — and require bit-identical results. Sizing knobs may only ever
+    cost time, never change the crawl (config.EngineTuning)."""
     from web_crawler_spark.config import EngineTuning
 
     t = EngineTuning(rows_per_partition=8, small_rank_threshold=0,
-                     wm_broadcast_max_hosts=0, bloom_capacity_factor=1)
-    run = run_engine(spark, tmp_path, use_bloom=True, tuning=t)
+                     wm_broadcast_max_hosts=0)
+    run = run_engine(spark, tmp_path, tuning=t)
     assert_matches_oracle(spark, run, golden)
     job = JobConfig(job_id=4, start_url="http://site0.test/p/0",
                     max_pages=40, max_depth=3, delay=0.0)
@@ -206,32 +193,45 @@ def test_engine_per_host_watermarks_table_backed(spark, tmp_path):
     assert wm == stage_max
 
 
-def test_engine_per_host_legacy_state_shim(spark, tmp_path):
-    """Run states written before the host_wm table carried the watermark map
-    as a ``host_watermarks`` dict in the state JSON. Resume must materialize
-    that dict into the table once and continue to the same final crawl."""
-    import shutil
+def test_engine_resume_rejects_state_it_cannot_continue(spark, tmp_path):
+    """Resume fails loudly, with one ValueError, on a run state this engine
+    cannot continue: a legacy ``host_watermarks`` map (per-host watermarks
+    come only from the host_wm table, so continuing would re-schedule
+    consumed URLs), a legacy physical-frontier state, or a state of the
+    other politeness mode."""
+    for mode, other, budget in (("per_host", "global", 3), ("global", "per_host", 7)):
+        path = str(tmp_path / mode)
+        part = engine.crawl(spark, JOB, CFG, RULES, path, budget=budget,
+                            politeness_mode=mode, max_rounds=2)
+        saved = part.state.load()
+        for patch, resume_mode, match in (
+            ({"host_watermarks": {"site0.test": 0}}, mode, "host_watermarks"),
+            ({"frontier": "physical"}, mode, "frontier='physical'"),
+            ({}, other, f"frontier={saved['frontier']!r}, requested"),
+        ):
+            part.state.save({**saved, **patch})
+            with pytest.raises(ValueError, match=match):
+                engine.crawl(spark, JOB, CFG, RULES, path, budget=budget,
+                             politeness_mode=resume_mode, resume=True)
 
-    from pyspark.sql import functions as F
 
-    job = JobConfig(job_id=3, start_url="http://site0.test/p/0", max_pages=40, max_depth=3, delay=0.0)
-    full = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "full"),
-                        budget=3, politeness_mode="per_host")
-    part = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "leg"),
-                        budget=3, politeness_mode="per_host", max_rounds=2)
-    # rewrite the run dir into the legacy shape: dict in state, no table
-    wm = {r["host"]: int(r["_wm"])
-          for r in engine._host_wm_agg(spark, part.tables["host_wm"]).collect()}
-    st = part.state.load()
-    st["host_watermarks"] = wm
-    part.state.save(st)
-    shutil.rmtree(part.tables["host_wm"].dir)
+def test_engine_frontier_view_is_pending_seen_rows(spark, tmp_path):
+    """The live ``frontier`` view holds exactly the seen rows whose seq has
+    no outcomes row yet (admitted, not yet fetched), and its size is the run
+    state's pending_count — for the global budget and per-host quotas."""
+    import os
 
-    res = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "leg"),
-                       budget=3, politeness_mode="per_host", resume=True)
-    a = [(r["seq"], r["url"]) for r in full.read(spark, "seen").orderBy("seq").collect()]
-    b = [(r["seq"], r["url"]) for r in res.read(spark, "seen").orderBy("seq").collect()]
-    assert a == b and a
+    for mode, budget in (("global", 7), ("per_host", 3)):
+        run = engine.crawl(spark, JOB, CFG, RULES, str(tmp_path / mode),
+                           budget=budget, politeness_mode=mode, max_rounds=3)
+        fetched = {r["seq"] for r in run.read(spark, "outcomes").collect()}
+        pending = {(r["seq"], r["url"]) for r in run.read(spark, "seen").collect()
+                   if r["seq"] not in fetched}
+        frontier = run.read(spark, "frontier").collect()
+        assert {(r["seq"], r["url"]) for r in frontier} == pending and pending
+        assert len(frontier) == run.state.load()["pending_count"]
+    os.unlink(run.state.path)  # a storage dir with no run state has no frontier
+    assert run.read(spark, "frontier") is None
 
 
 def test_engine_resume_from_snapshot(spark, tmp_path, golden):
@@ -411,20 +411,6 @@ def test_engine_matches_oracle_varied_webs(spark, tmp_path, web_kw, job_kw):
     assert_matches_oracle(spark, run, res)
 
 
-def test_engine_resume_with_bloom(spark, tmp_path, golden):
-    """Resume with the incremental bloom: the carried bitmap dies with the
-    first process, so the resumed run must rebuild it from the restored seen
-    table and still produce the oracle-exact crawl (round 3: bloom is built
-    once at max_pages capacity and new admissions are OR'd in per round)."""
-    path = str(tmp_path / "resume_bloom")
-    run1 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, max_rounds=3,
-                        use_bloom=True)
-    assert run1.rounds == 3
-    run2 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, resume=True,
-                        use_bloom=True)
-    assert_matches_oracle(spark, run2, golden)
-
-
 # Pipelined rounds: under a global budget, rounds whose seq range is already
 # admitted fetch on idle cores while an earlier round admits; their stage data
 # is written ahead and committed in round order.
@@ -576,3 +562,28 @@ def test_snapshot_rows_of_empty_write(spark, tmp_path):
     assert [s["rows"] for s in t._load()] == [5, 0]
     for s in t._load():
         assert s["rows"] == spark.read.schema("id long").parquet(s["path"]).count()
+
+
+def test_snapshot_manifest_with_mode_key_still_reads(spark, tmp_path):
+    """Manifests written while snapshots had an append/overwrite mode carry
+    ``"mode": "append"`` on every entry; they still read, time-travel and
+    compact."""
+    from web_crawler_spark.catalog import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path), "t")
+    for r in (1, 2, 3):
+        t.write(spark.range(r * 10, r * 10 + 2), r)
+    with open(t._manifest_path) as f:
+        doc = json.load(f)
+    for s in doc["snapshots"]:
+        s["mode"] = "append"
+    with open(t._manifest_path, "w") as f:
+        json.dump(doc, f)
+
+    def ids(df):
+        return sorted(r["id"] for r in df.collect())
+
+    assert ids(t.read(spark, schema="id long")) == [10, 11, 20, 21, 30, 31]
+    assert ids(t.read(spark, as_of_round=2, schema="id long")) == [10, 11, 20, 21]
+    assert t.compact(spark, up_to_round=2, schema="id long")
+    assert ids(t.read(spark, schema="id long")) == [10, 11, 20, 21, 30, 31]

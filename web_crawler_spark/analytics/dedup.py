@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from .common import SQL_WORDS, WORDS as _WORDS, sql_word_hash32, table, word_hash32
 
-N_HASHES = 16
 N_BANDS = 8
 ROWS_PER_BAND = 2
 JACCARD_T = 0.5
@@ -80,13 +79,6 @@ SHINGLE_DF_CAP = 50
 # tokenizer comes from common.WORDS (one shared definition)
 # 3-gram shingles, distinct, guarded for <3-word docs (Spark's sequence()
 # DESCENDS when start > stop — the guard is semantics, not style)
-_SHINGLES = (
-    f"CASE WHEN size({_WORDS}) >= 3 THEN "
-    f"array_distinct(transform(sequence(1, size({_WORDS}) - 2), "
-    f"i -> concat_ws(' ', slice({_WORDS}, i, 3)))) "
-    f"ELSE array() END"
-)
-
 SQL_SHINGLE_CTE = f"""
 shingle AS (
   SELECT doc_id, unnest(list_distinct(

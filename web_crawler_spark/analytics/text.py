@@ -399,7 +399,6 @@ FROM rep
 # rollup. Segments travel as 8-byte longs, not strings.
 # ---------------------------------------------------------------------------
 
-SEG_WORDS = 10        # words per segment
 SEG_SHARED_T = 0.5    # drop a doc when >= this fraction of segments is shared
 
 # built over a pre-bound `ws` column so the text is split exactly once;

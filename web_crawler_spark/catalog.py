@@ -11,12 +11,12 @@ module provides the same contract on parquet:
   old one (readers never see partial state); the two steps are separate
   calls, so data can be written ahead of (and concurrently with) commits
   that must land in round order
-- ``append`` adds a snapshot; ``overwrite`` adds a snapshot that supersedes all
-  prior ones (Iceberg's dynamic overwrite)
+- every commit appends a snapshot; the live state is all committed snapshots
+  (manifests written with a per-snapshot ``"mode": "append"`` key still read)
 - resume = read the manifest as of the last committed round
 
 Swapping this for Iceberg changes only this file: the engine talks in
-append/overwrite/read/rollback terms.
+write/commit/read/compact/rollback terms.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 @dataclass
 class Snapshot:
     snapshot_id: int  # -1 until committed
-    mode: str  # 'append' | 'overwrite'
     round: int
     path: str
     rows: int
@@ -91,24 +90,24 @@ class SnapshotTable:
         path = self._new_path(round)
         observed = _write_parquet(df, path, **observe)
         rows = observed.pop("rows")
-        return Snapshot(-1, "append", round, path, rows, observed)
+        return Snapshot(-1, round, path, rows, observed)
 
-    def commit(self, snap: Snapshot, mode: str = "append") -> Snapshot:
+    def commit(self, snap: Snapshot) -> Snapshot:
         """Make a :meth:`write_data` snapshot visible; allocates its id.
         Commits must come from one thread, in round order."""
         snaps = self._load()
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
-        snaps.append({"snapshot_id": sid, "mode": mode, "round": snap.round,
+        snaps.append({"snapshot_id": sid, "round": snap.round,
                       "path": snap.path, "rows": snap.rows})
         self._commit(snaps)
-        return replace(snap, snapshot_id=sid, mode=mode)
+        return replace(snap, snapshot_id=sid)
 
     def discard(self, snap: Snapshot) -> None:
         """Delete an uncommitted :meth:`write_data` snapshot."""
         shutil.rmtree(snap.path, ignore_errors=True)
 
-    def write(self, df: DataFrame, round: int, mode: str = "append") -> Snapshot:
-        return self.commit(self.write_data(df, round), mode)
+    def write(self, df: DataFrame, round: int) -> Snapshot:
+        return self.commit(self.write_data(df, round))
 
     def live_paths(self, as_of_round: Optional[int] = None) -> list[str]:
         """Snapshot paths contributing to the current (or as-of-round) state."""
@@ -121,13 +120,7 @@ class SnapshotTable:
                     f"through round {expired} were compacted/expired"
                 )
             snaps = [s for s in snaps if s["round"] <= as_of_round]
-        live: list[dict] = []
-        for s in snaps:  # manifest order == commit order
-            if s["mode"] == "overwrite":
-                live = [s]
-            else:
-                live.append(s)
-        return [s["path"] for s in live]
+        return [s["path"] for s in snaps]
 
     def read(
         self,
@@ -168,17 +161,11 @@ class SnapshotTable:
         happened (skipped when fewer than *min_snapshots* qualify).
         """
         snaps = self._load()
-        live: list[dict] = []
-        for s in snaps:
-            if s["mode"] == "overwrite":
-                live = [s]
-            else:
-                live.append(s)
-        horizon = max((s["round"] for s in live), default=0) if up_to_round is None else up_to_round
-        # live is commit-ordered; only a PREFIX may merge (rounds are
+        horizon = max((s["round"] for s in snaps), default=0) if up_to_round is None else up_to_round
+        # the manifest is commit-ordered; only a PREFIX may merge (rounds are
         # monotone per commit order), so later snapshots keep their place
         prefix = []
-        for s in live:
+        for s in snaps:
             if s["round"] <= horizon:
                 prefix.append(s)
             else:
@@ -202,18 +189,15 @@ class SnapshotTable:
         rows = _write_parquet(df, merged_path)["rows"]
         merged = {
             "snapshot_id": sid,
-            "mode": prefix[0]["mode"],
             "round": merged_round,
             "path": merged_path,
             "rows": rows,
             "compacted_through": merged_round,
         }
-        remaining = live[len(prefix):]
-        self._commit([merged] + remaining)
-        dead = [s for s in snaps if s not in live]  # superseded by overwrite
+        self._commit([merged] + snaps[len(prefix):])
         # expire AFTER the manifest swap, so no new read lists these dirs;
         # the caller must first drain jobs already planned over them
-        for s in prefix + dead:
+        for s in prefix:
             shutil.rmtree(s["path"], ignore_errors=True)
         return True
 

@@ -60,26 +60,13 @@ class EngineTuning:
       into the pending filter; above it the join is left un-hinted so AQE
       picks a shuffle strategy — the watermark table is O(hosts) and must
       never be forced through a broadcast at open-web scale.
-    - ``bloom_*``: URL-seen bloom prefilter sizing. Capacity is derived from
-      the job's admission ceiling (``bloom_capacity``) so ONE filter serves
-      the whole crawl and rounds OR new keys in incrementally;
-      10 bits/key + 4 probes ≈ 1% false positives at capacity (false
-      positives only cost an extra pass through the exact anti-join).
+
+    The URL-seen check has no knob: it is always the exact anti-join.
     """
 
     rows_per_partition: int = 512
     small_rank_threshold: int = 65_536
     wm_broadcast_max_hosts: int = 1_000_000
-    bloom_bits_per_key: float = 10.0
-    bloom_k: int = 4
-    bloom_capacity_factor: int = 2
-    bloom_min_capacity: int = 1_024
-
-    def bloom_capacity(self, max_pages: int) -> int:
-        """Bloom capacity for a job admitting up to *max_pages* URLs: sized
-        at factor× the admission ceiling so the filter stays under its
-        design false-positive rate for the entire crawl."""
-        return max(self.bloom_min_capacity, max_pages * self.bloom_capacity_factor)
 
 
 DEFAULT_TUNING = EngineTuning()

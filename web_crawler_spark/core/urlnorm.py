@@ -124,7 +124,3 @@ def extract_links(
         seen.add(clean)
         out.append(ExtractedLink(clean, link_display_text(text, title_attr), len(out)))
     return out
-
-
-def url_host(url: str) -> str:
-    return urlparse(url).netloc

@@ -1,1 +1,1 @@
-"""Vectorized functions: pandas/Arrow UDFs and probabilistic membership filters."""
+"""Vectorized functions: the fused fetch/parse pandas UDF stage."""

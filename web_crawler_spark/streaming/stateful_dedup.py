@@ -8,10 +8,8 @@ reference's ``if link not in self.visited_urls`` (crawler.py:556) as an
 unbounded streaming operator.
 
 State is bounded per group and partitioned by host bucket, so at 10^10 URLs
-the state store shards horizontally like the batch seen table. (A production
-variant would swap the exact per-group set for the cuckoo filter in
-functions/filters.py plus an exact side table — same contract as the batch
-prefilters: accelerator only.)
+the state store shards horizontally like the batch seen table. The
+per-group set is exact, like the batch engine's seen anti-join.
 """
 
 from __future__ import annotations
@@ -20,7 +18,6 @@ from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -20,6 +20,16 @@ and relabel the union. Streaming admission must not mutate history, so
 the merge is deferred to the next batch re-label — the docstring-qualified
 stability trade in dedup.corpus_split applies here in reverse.
 
+A second divergence is not deliberate: the two sides verify Jaccard
+differently. The corpus label graph (``corpus_pairs``, mirroring
+``dedup_minhash_lsh``) uses UNCAPPED Jaccard over every shingle, while
+arrival matching (``stream_neardup``) drops boilerplate shingles with df >
+``SHINGLE_DF_CAP`` through ``hot_row``. An arrival whose similarity to a
+corpus document is carried by boilerplate therefore becomes a singleton
+group here, where a batch ``corpus_split`` re-run would group it with that
+document. One shared signature/band/verify path for the near-dup family
+would remove this by construction.
+
 Scale shape at 10^10 documents: the probe/verify stages are
 ``stream_neardup``'s (stream-static band equi-join + candidate-only exact
 Jaccard over discriminative shingles, one grouped agg back to document
